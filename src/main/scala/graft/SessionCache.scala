@@ -116,13 +116,6 @@ object SessionCache {
   def invalidateMemoized(s: SparkSession): Unit = {
     val sKey = sessionKey(s)
     map.keySet().removeIf(k => k._1 == sKey && !k._2.startsWith("pin:"))
-    // The IVF index memo lives in its own JVM-lifetime map (keyed by source
-    // dir, not session) — before r20 this doc promised "q86 trains IVF"
-    // first-touch semantics on retry but nothing cleared that map, so a
-    // retried q86/q94 (and every --fresh profiler rep after the first) rode
-    // the trained index and understated vs the band. Clearing is free of
-    // result risk: training is deterministic, a retrain is byte-identical.
-    graft.functions.Ivf.invalidateIndexCache()
   }
 
   /** Visible for tests: current number of live entries. */

@@ -27,153 +27,103 @@ object Components {
     * billion-vertex scale broadcasting labels is exactly wrong. */
   private val BroadcastLabelCap = 5000000L
 
-  /** Caps for the single-collect driver fast path (r19, optimization-guide
-    * §8 "decide with small rows"): a graph at or below these sizes is
-    * union-found on the driver in one collect + O(E α(V)) local work,
-    * replacing the loop's per-iteration driver planning (~0.3-0.5 s/round),
-    * label broadcasts and edge-frame shuffles — measured 2.7 s → ~0.3 s on
-    * q133's sf0.1 graph (3,935 vertices / 511,821 edges, 3 rounds). Heap
-    * math (r19 ADVICE #3, honest since the r20 primitive-encoder collect):
-    * an edge lands as one specialized Tuple2[Long, Long] (~32 B object +
-    * 8 B array slot), a vertex as an unboxed 8 B long plus ~48 B of
-    * LongMap/buffer bookkeeping — so 4M edges ≈ 160 MB and 2M vertices
-    * ≈ 110 MB of driver heap worst-case. [[driverComponents]] additionally
-    * bounds both collects by maxMemory/512 rows (≥10× slack over the ~40-56
-    * B/row real cost), so a default-1g driver self-limits to ~2M rows
-    * instead of OOMing at these constants. Beyond either cap (or non-long
-    * ids) the distributed loop below stands unchanged — at billion-edge
-    * scale collecting the graph is exactly wrong. */
-  private val DriverVertexCap = 2000000L
-  private val DriverEdgeCap = 4000000L
+  /** Element budget for the driver fast path ([[driverComponents]]): a
+    * vertex weighs 1 and an edge 2, so the default covers the sum of a 2M
+    * vertex and a 4M edge graph, lowered by [[LocalPath]]'s heap rule.
+    * Within it, one collect per input plus O(E α(V)) local union-find
+    * replaces the loop's per-round driver planning, label broadcasts and
+    * edge shuffles. */
+  private[graft] val DriverBudget = 10000000L
 
   /** vertices: (id) — one row per vertex; edges: (src, dst) undirected
     * pairs. Returns (id, rep) with rep = min id in the component.
-    * `driverVertexCap`/`driverEdgeCap` exist for tests to force either
-    * path (0 = always the distributed loop); production call sites use
-    * the defaults. */
+    * `driverBudget` exists for tests to force either path (0 = always the
+    * distributed loop); production call sites use the default. */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
-      maxIter: Int = 20, driverVertexCap: Long = DriverVertexCap,
-      driverEdgeCap: Long = DriverEdgeCap): DataFrame = {
-    driverComponents(vertices, edges, driverVertexCap, driverEdgeCap)
+      maxIter: Int = 20, driverBudget: Long = DriverBudget): DataFrame =
+    driverComponents(vertices, edges, driverBudget)
       .getOrElse(loopComponents(vertices, edges, maxIter))
-  }
 
-  /** Driver union-find over a bounded graph: one limit-guarded collect per
-    * input (the limit(cap+1) makes "too big" observable WITHOUT a separate
-    * count job — if the collect comes back over the cap, fall back to the
-    * loop; the wasted work is then one executeTake of ≤cap+1 rows per
-    * overflowing input, and the vertex overflow short-circuits BEFORE the
-    * edge collect so the expensive edge pipeline is never probed in that
-    * case), path-compressed union-find with min-id roots, and a local
-    * relation out (the caller broadcast-joins it, same as the loop's
-    * result). Long ids only — the loop handles anything least()-comparable,
-    * so non-long schemas simply keep the old path. Collects go through
-    * primitive encoders (r19 ADVICE #3): unboxed longs / specialized
-    * tuples instead of GenericRows with boxed Longs, so the cap comment's
-    * heap arithmetic is the real cost, and a live maxMemory/512 row bound
-    * keeps small-heap drivers safe below the absolute caps.
+  /** Driver union-find over a graph that fits `budget`, or None. Long ids
+    * only; the loop handles anything least()-comparable. The vertices are
+    * collected first under the whole budget and the edges under what they
+    * left, each through [[LocalPath.collectBounded]]; a vertex overflow
+    * never runs the edge pipeline. Fallback cost: those one or two
+    * bounded jobs, then the loop. The result is a local relation the
+    * caller broadcast-joins, like the loop's.
     *
-    * UNDECLARED ("phantom") edge endpoints replicate the loop exactly
-    * (r19 ADVICE #2 adjudicated the divergence; the loop semantics are the
-    * documented contract): the loop's label joins confine a phantom id to
-    * round 0's raw neighbor-min, where it can LOWER a declared neighbor's
-    * label — and that label then spreads through the component via
-    * declared edges — but a phantom can never BRIDGE two declared
-    * vertices (rounds ≥1 drop phantom edges on the label join, and the
-    * convergence certificate only inspects declared-declared edges). So:
-    * union-find over declared-declared edges only, a per-vertex one-hop
-    * phantom minimum on the side, folded into each component's final min.
-    * EdgeCaseSpec pins the transitive-phantom and smaller-phantom cases on
-    * BOTH paths. */
-  private def driverComponents(vertices: DataFrame, edges: DataFrame,
-      vertexCap: Long, edgeCap: Long): Option[DataFrame] = {
+    * Undeclared ("phantom") edge endpoints follow the loop exactly: the
+    * loop's label joins confine a phantom id to round 0's raw
+    * neighbor-min, where it can LOWER a declared neighbor's label (which
+    * then spreads through the component via declared edges), but a
+    * phantom can never BRIDGE two declared vertices (rounds ≥1 drop
+    * phantom edges on the label join, and the convergence certificate
+    * only inspects declared-declared edges). So: union-find over
+    * declared-declared edges only, a per-vertex one-hop phantom minimum on
+    * the side, folded into each component's final min. EdgeCaseSpec pins
+    * the transitive-phantom and smaller-phantom cases on BOTH paths. */
+  private[graft] def driverComponents(vertices: DataFrame, edges: DataFrame,
+      budget: Long): Option[DataFrame] = {
     val longIds = vertices.schema.fields.headOption.exists(_.dataType == LongType) &&
       edges.schema.fields.forall(_.dataType == LongType)
-    if (!longIds || vertexCap <= 0 || edgeCap <= 0) return None
-    val heapRows = Runtime.getRuntime.maxMemory / 512
-    val vCap = math.min(vertexCap, heapRows)
-    val eCap = math.min(edgeCap, heapRows)
-    if (vCap <= 0 || eCap <= 0) return None
-    if (vCap > Int.MaxValue - 1 || eCap > Int.MaxValue - 1) return None
+    if (!longIds) return None
     val spark = vertices.sparkSession
     import spark.implicits._
-    val vs = vertices.select(col("id")).limit(vCap.toInt + 1)
-      .as[Long].collect()
-    if (vs.length > vCap) return None
-    val es = edges.select(col("src"), col("dst")).limit(eCap.toInt + 1)
-      .as[(Long, Long)].collect()
-    if (es.length > eCap) return None
-    val idx = new scala.collection.mutable.LongMap[Int](vs.length * 2)
-    val ids = new scala.collection.mutable.ArrayBuffer[Long](vs.length)
-    vs.foreach { id =>
-      if (!idx.contains(id)) { idx.put(id, ids.length); ids += id }
+    for {
+      vs <- LocalPath.collectBounded(vertices.select(col("id")).as[Long], budget)(_ => 1L)
+      es <- LocalPath.collectBounded(edges.select(col("src"), col("dst")).as[(Long, Long)],
+        budget - vs.length)(_ => 2L)
+    } yield {
+      val idx = new scala.collection.mutable.LongMap[Int](vs.length * 2)
+      val ids = new scala.collection.mutable.ArrayBuffer[Long](vs.length)
+      vs.foreach { id =>
+        if (!idx.contains(id)) { idx.put(id, ids.length); ids += id }
+      }
+      val nV = ids.length // output rows = declared vertices only
+      val uf = new UnionFind(ids.toArray)
+      // One-hop phantom minimum per declared vertex (the loop's round-0 raw
+      // neighbor-min contribution from undeclared endpoints).
+      val phanMin = Array.fill(nV)(Long.MaxValue)
+      es.foreach { case (a, b) =>
+        val ia = idx.getOrElse(a, -1)
+        val ib = idx.getOrElse(b, -1)
+        if (ia >= 0 && ib >= 0) uf.union(ia, ib)
+        else if (ia >= 0) {
+          if (b < phanMin(ia)) phanMin(ia) = b
+        } else if (ib >= 0) {
+          if (a < phanMin(ib)) phanMin(ib) = a
+        } // both undeclared: the loop never sees the edge — drop it
+      }
+      // Fold the one-hop phantom minima into each component's root: the loop
+      // spreads a round-0-lowered label through the component's declared
+      // edges, so the fixpoint is min(component ids, members' phantom mins).
+      val rootPhan = Array.fill(nV)(Long.MaxValue)
+      var i = 0
+      while (i < nV) {
+        val r = uf.find(i)
+        if (phanMin(i) < rootPhan(r)) rootPhan(r) = phanMin(i)
+        i += 1
+      }
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id", LongType, nullable = false),
+        org.apache.spark.sql.types.StructField("rep", LongType, nullable = false)))
+      val out = (0 until nV).map { k =>
+        Row(ids(k), math.min(uf.minKey(k), rootPhan(uf.find(k))))
+      }
+      spark.createDataFrame(
+        new java.util.ArrayList[Row](scala.jdk.CollectionConverters
+          .SeqHasAsJava(out).asJava), schema)
     }
-    val nV = ids.length // output rows = declared vertices only
-    val parent = Array.tabulate(nV)(identity)
-    def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-      r
-    }
-    // One-hop phantom minimum per declared vertex (the loop's round-0 raw
-    // neighbor-min contribution from undeclared endpoints).
-    val phanMin = Array.fill(nV)(Long.MaxValue)
-    es.foreach { case (a, b) =>
-      val ia = idx.getOrElse(a, -1)
-      val ib = idx.getOrElse(b, -1)
-      if (ia >= 0 && ib >= 0) {
-        // Union with min-ID roots: the root's id IS the component minimum,
-        // the same invariant the loop's least()-propagation converges to.
-        val ra = find(ia)
-        val rb = find(ib)
-        if (ra != rb) {
-          if (ids(ra) < ids(rb)) parent(rb) = ra else parent(ra) = rb
-        }
-      } else if (ia >= 0) {
-        if (b < phanMin(ia)) phanMin(ia) = b
-      } else if (ib >= 0) {
-        if (a < phanMin(ib)) phanMin(ib) = a
-      } // both undeclared: the loop never sees the edge — drop it
-    }
-    // Fold the one-hop phantom minima into each component's root: the loop
-    // spreads a round-0-lowered label through the component's declared
-    // edges, so the fixpoint is min(component ids, members' phantom mins).
-    val rootPhan = Array.fill(nV)(Long.MaxValue)
-    var i = 0
-    while (i < nV) {
-      val r = find(i)
-      if (phanMin(i) < rootPhan(r)) rootPhan(r) = phanMin(i)
-      i += 1
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("rep", LongType, nullable = false)))
-    val out = (0 until nV).map { k =>
-      val r = find(k)
-      Row(ids(k), math.min(ids(r), rootPhan(r)))
-    }
-    Some(spark.createDataFrame(
-      new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-        .SeqHasAsJava(out).asJava), schema))
   }
 
   private def loopComponents(vertices: DataFrame, edges: DataFrame,
       maxIter: Int): DataFrame = {
     // Materialize the (possibly expensive) edge pipeline ONCE — the loop
     // re-reads it every iteration.
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    def seg[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      if (debug) System.err.println(
-        f"[cc] $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
     val und = edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .cache()
-    seg("und materialize")(und.count())
+    und.count()
     // localCheckpoint per iteration truncates lineage AND the logical plan —
     // without it every iteration nests the previous plan and analysis time
     // grows exponentially (the classic iterative-DataFrame trap). Lazy
@@ -183,12 +133,11 @@ object Components {
       vertices.select(col("id"), col("id").as("rep")))
     // One count decides the join strategy for the whole loop: the label
     // table's row count is invariant (one row per vertex, every round).
-    val small = seg("labels init")(labels.count()) <= BroadcastLabelCap
+    val small = labels.count() <= BroadcastLabelCap
     def side(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val tIter = System.nanoTime()
       // Round 0 reads identity labels (rep ≡ id), so its neighbor-min needs
       // no label join at all: min(rep(dst)) ≡ min(dst). One broadcast join
       // fewer in the round-0 plan — driver plan construction is this loop's
@@ -204,7 +153,7 @@ object Components {
       // Checkpoint before the self-join below — step1 feeds BOTH sides of
       // the pointer jump, and without materialization the neighbor-min
       // join/aggregate subtree would execute twice per iteration. Lazy
-      // (pinned): the iteration's changed-count action materializes it and
+      // (pinned): the iteration's convergence action materializes it and
       // both pointer-jump sides read the persisted blocks (the MinHash
       // banded-frame pattern) — one job per iteration where the eager form
       // paid two. Round-9 measurement honesty: this did NOT move the q133
@@ -224,58 +173,39 @@ object Components {
       val step0 = step1.join(side(reps), step1("rep") === col("rid"), "left")
         .select(step1("id"), step1("old_rep"),
           coalesce(col("rrep"), step1("rep")).as("rep"))
-      // Lazy, not eager: the FIRST consumer is the changed-count below,
-      // whose action both materializes the checkpoint and truncates
+      // Lazy, not eager: the FIRST consumer is the convergence check
+      // below, whose action both materializes the checkpoint and truncates
       // lineage — one Spark job where the eager form paid two
       // (materialize, then count). Routed through the pinned helper so
       // the truncated plan's SQLMetric accumulators stay strongly
       // reachable (the r4 weak-ref accumulator race — SessionCache.pin).
       val step = graft.SessionCache.lazyLocalCheckpoint(s"cc-step-$i")(step0)
-      // Convergence certificate fused into the SAME action as the changed
-      // count (round-10, VERDICT r9 #3): a labeling is a fixpoint iff no
-      // edge joins two different reps. viol == 0 on the NEW labels implies
-      // every component's labels are constant (any violating edge (u,v)
-      // with rep(u) > rep(v) forces nbrMin(u) < rep(u), so no violations ⇒
-      // no next-round change; and component-constant labels satisfy
-      // rep(rep) = rep, so the jump is a no-op too). The loop therefore
-      // exits in the round that REACHES the fixpoint instead of running one
-      // more full round just to observe changed == 0 — 3 rounds instead of
-      // 4 on the sf0.1 dedup graph (changed = [2583, 1341, 6], viol hits 0
-      // alongside the 6) — at the cost of two broadcast joins against the
-      // cached edge frame inside the existing per-round action. `changed`
-      // is retained for the debug trace only. Round 0 skips the certificate:
-      // a freshly-seeded labeling is never a fixpoint on a non-trivial graph
-      // (and on an edge-free graph round 0's changed == 0 exit fires), so
-      // paying the certificate's edge scan there was pure waste — measured
-      // ~0.4 s of the round-0 action.
-      val t0 = System.nanoTime()
-      val (changed, violCnt) =
-        if (i == 0) {
-          val c = step.filter(col("rep") =!= col("old_rep")).count()
-          (c, if (c == 0) 0L else -1L)
-        } else {
+      // Convergence certificate (round ≥1): a labeling is a fixpoint iff
+      // no edge joins two different reps. viol == 0 on the NEW labels
+      // implies every component's labels are constant (any violating edge
+      // (u,v) with rep(u) > rep(v) forces nbrMin(u) < rep(u), so no
+      // violations ⇒ no next-round change; and component-constant labels
+      // satisfy rep(rep) = rep, so the jump is a no-op too). The loop
+      // therefore exits in the round that REACHES the fixpoint instead of
+      // running one more full round just to observe no change — 3 rounds
+      // instead of 4 on the sf0.1 dedup graph. Round 0 skips the
+      // certificate: a freshly-seeded labeling is never a fixpoint on a
+      // non-trivial graph, and on an edge-free graph round 0 changes no
+      // label, so its changed-count decides instead (the certificate's
+      // edge scan there measured ~0.4 s of the round-0 action).
+      converged =
+        if (i == 0) step.filter(col("rep") =!= col("old_rep")).count() == 0L
+        else {
           val lab = step.select(col("id"), col("rep"))
-          val viol = und
+          und
             .join(side(lab.select(col("id").as("sid"), col("rep").as("srep"))),
               und("src") === col("sid"))
             .join(side(lab.select(col("id").as("did"), col("rep").as("drep"))),
               und("dst") === col("did"))
             .filter(col("srep") =!= col("drep"))
-          val row = step
-            .select((col("rep") =!= col("old_rep")).cast("long").as("c"),
-              lit(0L).as("v"))
-            .unionAll(viol.select(lit(0L).as("c"), lit(1L).as("v")))
-            .agg(coalesce(sum(col("c")), lit(0L)).as("c"),
-              coalesce(sum(col("v")), lit(0L)).as("v"))
-            .head()
-          (row.getLong(0), row.getLong(1))
+            .count() == 0L
         }
-      if (debug)
-        System.err.println(s"[cc] iter=$i changed=$changed viol=$violCnt " +
-          f"action=${(System.nanoTime() - t0) / 1e9}%.2fs " +
-          f"iter_total=${(System.nanoTime() - tIter) / 1e9}%.2fs")
       labels = step.select("id", "rep")
-      converged = violCnt == 0L
       i += 1
     }
     und.unpersist()

@@ -65,28 +65,15 @@ object Ivf {
       (array_position(scores, array_min(scores)) - 1).cast("int")
     }
 
-  /** Session-lifetime index cache for trainCached. Trained centroids are a
-    * few KB (nlist × dim doubles); entries live for the JVM. */
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String, Int, Int), Array[Array[Double]]]()
-
-  /** Drops every trained index. Part of the bench-retry invalidation
-    * contract ([[graft.SessionCache.invalidateMemoized]] documents that a
-    * retried q86 must pay first-touch training like the band run did) —
-    * before r20 the doc made that promise but nothing cleared THIS cache,
-    * so a retried q86/q94 rode the trained index and understated vs band.
-    * Global (the cache is keyed by source dir, not session): acceptable for
-    * the single-session Bench/profiler processes that call it; a cleared
-    * entry merely retrains, byte-identically (training is deterministic). */
-  def invalidateIndexCache(): Unit = indexCache.clear()
-
-  /** train(), memoized per (cacheKey, idCol, vecCol, nlist, iters) — the
-    * index-catalog pattern: a production vector store trains its IVF index
-    * once and every consumer (ANN search, semantic dedup, cluster
-    * analytics) reuses it, rather than re-running k-means per query.
-    * Callers pass the source directory as cacheKey; the test datasets are
-    * immutable per path, which is the documented cache-coherence contract
-    * (a mutable corpus would key on a snapshot/version id instead).
+  /** train(), memoized per session under (cacheKey, idCol, vecCol, nlist,
+    * iters) through [[graft.SessionCache]] — the index-catalog pattern: a
+    * production vector store trains its IVF index once and every consumer
+    * (ANN search, semantic dedup, cluster analytics) reuses it, rather
+    * than re-running k-means per query. Callers pass the source directory
+    * as cacheKey; the test datasets are immutable per path, which is the
+    * documented cache-coherence contract (a mutable corpus would key on a
+    * snapshot/version id instead). [[graft.SessionCache.invalidateMemoized]]
+    * drops the index of that session only.
     * CALLER CONTRACT: the key does not see the DataFrame itself, so two
     * callers with the same (cacheKey, cols) must prepare vectors
     * IDENTICALLY — a caller that normalizes/truncates differently must use
@@ -94,24 +81,23 @@ object Ivf {
     * byte-identical to a retrain. */
   def trainCached(vecs: DataFrame, idCol: String, vecCol: String,
       nlist: Int, iters: Int, cacheKey: String): Array[Array[Double]] =
-    indexCache.computeIfAbsent((cacheKey, idCol, vecCol, nlist, iters),
-      _ => train(vecs, idCol, vecCol, nlist, iters))
+    graft.SessionCache.getOrBuild(vecs.sparkSession,
+      s"ivf:$cacheKey:$idCol:$vecCol:$nlist:$iters") {
+      train(vecs, idCol, vecCol, nlist, iters)
+    }
 
   /** Deterministic k-means: init = nlist lowest-id vectors, `iters` rounds
     * of assign + decimal-exact mean update. vecs: (idCol, vecCol:
     * array<double>). Returns nlist×dim centroids (row i = cluster i).
     *
-    * Two execution paths, byte-identical by construction (equivalence
-    * pinned in SketchSpec across fixtures, synthetic and randomized
-    * inputs): a driver-local fast path for bounded training sets
-    * ([[driverTrain]] — optimization-guide §8 "decide with small rows",
-    * the Components.driverComponents pattern) and the distributed loop
-    * ([[loopTrain]]) beyond the caps or for non-(long, array<double>)
-    * schemas. `driverElemCap` exists for tests to force either path
+    * Two execution paths, bit-identical by construction (IvfTrainSpec
+    * pins them against each other): the driver-local [[driverTrain]] when
+    * the training set fits `driverBudget`, else the distributed
+    * [[loopTrain]]. `driverBudget` exists for tests to force either path
     * (0 = always the distributed loop). */
   def train(vecs: DataFrame, idCol: String, vecCol: String,
       nlist: Int, iters: Int,
-      driverElemCap: Long = DriverTrainElemCap): Array[Array[Double]] = {
+      driverBudget: Long = DriverBudget): Array[Array[Double]] = {
     graft.plans.VectorFunctions.register(vecs.sparkSession)
     // Train only on fully-finite vectors: a NaN/Inf coordinate would (a)
     // poison the decimal mean update (ANSI cast of NaN to decimal throws)
@@ -119,23 +105,19 @@ object Ivf {
     // at search time — dist2 coalesces their NaN distances to +Infinity.
     // isnan(v - v) is true exactly for NaN and ±Infinity.
     val finite = vecs.filter(forall(col(vecCol), v => !isnan(v - v)))
-    driverTrain(finite, idCol, vecCol, nlist, iters, driverElemCap)
+    driverTrain(finite, idCol, vecCol, nlist, iters, driverBudget)
       .getOrElse(loopTrain(finite, idCol, vecCol, nlist, iters))
   }
 
-  /** Element budget (rows × dim doubles) for the driver-local training fast
-    * path, bounding BOTH driver heap and driver compute: 4M doubles = 32 MB
-    * of primitive payload (collected via a primitive-array encoder, so no
-    * per-element boxing — the Components r19 ADVICE lesson applied from the
-    * start), and ≤4M exact-decimal mean additions per iteration (~0.5 s of
-    * local BigDecimal work worst-case — past that the distributed
-    * aggregation is genuinely better anyway). The effective row cap is
-    * additionally derived from the live driver heap in [[driverTrain]]
-    * (maxMemory/64 bytes), so a small-heap driver lowers it automatically
-    * rather than OOMing at the documented constant. */
-  private val DriverTrainElemCap = 4000000L
+  /** Element budget of the driver training path: a row weighs 1 + dim
+    * (id and coordinates), so 4M elements = 32 MB of primitive payload,
+    * lowered by [[LocalPath]]'s heap rule. It also bounds driver compute:
+    * ≤4M exact-decimal mean additions per iteration (~0.5 s of local
+    * BigDecimal work), past which the distributed aggregation is better
+    * anyway. */
+  private[graft] val DriverBudget = 4000000L
 
-  /** Driver-local replica of [[loopTrain]], byte-identical by construction:
+  /** Driver-local replica of [[loopTrain]], bit-identical by construction:
     * every arithmetic step reuses the exact semantics of the distributed
     * plan — grouping keys normalize -0.0 → 0.0 (Spark's
     * NormalizeFloatingNumbers), scores share [[centroidScore]]'s
@@ -147,21 +129,17 @@ object Ivf {
     * changePrecision(38,14) call chain the Cast/Sum/Divide expressions
     * execute, including the ANSI throw on overflow.
     *
-    * Why: training is the dominant q86 cost and is ~9 Spark jobs of
-    * per-iteration driver planning (init collect + iters × mean-update
-    * collect + persist) over a training set that is TINY by design — the
-    * centroids themselves must fit on the driver either way, and the
-    * assignment plan carries nlist×dim literals, so nlist/dim are bounded
-    * by plan size before they are bounded by these caps. One probe row +
-    * one limit-guarded collect replaces all of it. Beyond the caps (or for
-    * non-long ids / non-array<double> vectors) the distributed loop stands
-    * unchanged — at billion-vector scale collecting the training set is
-    * exactly wrong. Fallback cost when the collect overflows the cap: the
-    * probe + one executeTake of cap+1 rows, disclosed here like
-    * Components.driverComponents' probe. */
-  private def driverTrain(finite: DataFrame, idCol: String, vecCol: String,
-      nlist: Int, iters: Int, elemCap: Long): Option[Array[Array[Double]]] = {
-    import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, Decimal}
+    * Returns None, and the loop runs, unless ids are long, vectors are
+    * array<double>, `spark.sql.ansi.enabled` is true (with ANSI off the
+    * loop's decimal cast yields NULLs that its sum skips, where this path
+    * would throw), and the training set fits `budget` in
+    * [[LocalPath.collectBounded]]. Within it, one collect replaces the
+    * loop's iters+1 actions over a training set that is tiny by design:
+    * the assignment plan carries nlist×dim literals, so nlist and dim are
+    * bounded by plan size first. Fallback cost: that one bounded job. */
+  private[graft] def driverTrain(finite: DataFrame, idCol: String, vecCol: String,
+      nlist: Int, iters: Int, budget: Long): Option[Array[Array[Double]]] = {
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
     val schema = finite.schema
     val okTypes =
       schema.fields.exists(f => f.name == idCol && f.dataType == LongType) &&
@@ -170,26 +148,19 @@ object Ivf {
             case ArrayType(DoubleType, _) => true
             case _ => false
           }))
-    if (!okTypes || elemCap <= 0 || nlist <= 0) return None
-    // Dim probe (one LIMIT-1 job): the row cap must be derived BEFORE the
-    // collect — a huge-dim corpus under a row-only cap would allocate
-    // rowCap × dim unbounded heap before any post-hoc check could run.
-    val probe = finite.select(col(vecCol)).limit(1).collect()
-    if (probe.isEmpty) return Some(Array.empty) // loopTrain on empty input
-    val dim = math.max(probe.head.getSeq[Double](0).length, 1)
-    val heapRows = Runtime.getRuntime.maxMemory / 64 / (dim.toLong * 8 + 64)
-    val rowCap = math.min(elemCap / dim, heapRows)
-    if (rowCap <= 0 || rowCap > Int.MaxValue - 1) return None
     val spark = finite.sparkSession
+    val ansi = spark.conf.get("spark.sql.ansi.enabled").toBoolean
+    if (!okTypes || !ansi || nlist <= 0) return None
     import spark.implicits._
-    val rows = finite.select(col(idCol), col(vecCol))
-      .limit(rowCap.toInt + 1).as[(Long, Array[Double])].collect()
-    if (rows.length > rowCap) return None
-    // Heterogeneous-dim guard: the probe sized the cap from ONE row; if the
-    // actual payload exceeds the element budget (longer vectors later in
-    // the set), fall back rather than run an unbudgeted local loop.
-    if (rows.iterator.map(_._2.length.toLong).sum > elemCap) return None
+    LocalPath.collectBounded(
+      finite.select(col(idCol), col(vecCol)).as[(Long, Array[Double])], budget)(
+      r => 1L + r._2.length).map(fit(_, nlist, iters))
+  }
 
+  /** [[driverTrain]]'s k-means over the collected training set. */
+  private def fit(rows: Array[(Long, Array[Double])], nlist: Int,
+      iters: Int): Array[Array[Double]] = {
+    import org.apache.spark.sql.types.Decimal
     // ---- init: distinct vectors (min owning id per NORMALIZED vector,
     // lowest ids first), exactly groupBy(vec).agg(min(id)).orderBy.limit ----
     def normKey(v: Array[Double]): scala.collection.immutable.ArraySeq[Double] =
@@ -252,7 +223,7 @@ object Ivf {
       }
       centroids = next
     }
-    Some(centroids)
+    centroids
   }
 
   /** [[centroidScore]]'s exact double arithmetic, locally: cc via the same
@@ -270,8 +241,8 @@ object Ivf {
     if ((s - s).isNaN) Double.PositiveInfinity else s
   }
 
-  /** The distributed training loop (pre-r20 `train` body): iters+1 driver
-    * actions over the persisted training set. */
+  /** The distributed training loop: iters+1 driver actions over the
+    * persisted training set. */
   private def loopTrain(finite0: DataFrame, idCol: String, vecCol: String,
       nlist: Int, iters: Int): Array[Array[Double]] = {
     // Persist: the training set is consumed by iters+1 driver actions (init

@@ -71,6 +71,24 @@ object MinHash {
     docs.groupBy(sort_array(col(tokensCol)).as("toks"))
       .agg(collect_list(col(idCol)).as("ids"), min(col(idCol)).as("rep"))
 
+  /** The distinct tokens of `sets` (toks: array<string>) without null,
+    * sorted in UTF-8 byte order (exactly UTF8String/sort_array binary
+    * order — NOT java String order, which diverges on supplementary
+    * planes), when there are at most 64 of them counting a null token:
+    * the bitmask confirm path of [[nearDupPairs]]. None otherwise, and the
+    * open-vocabulary path runs. One [[LocalPath.collectBounded]] job with
+    * each token weighing 1, so a large vocabulary costs 65 distinct rows,
+    * never a full-corpus distinct count. */
+  private[graft] def localVocab(sets: DataFrame): Option[Seq[String]] =
+    LocalPath.collectBounded(
+      sets.select(explode(col("toks")).as("tok")).distinct()
+        .as(org.apache.spark.sql.Encoders.STRING), 64L)(_ => 1L)
+      .map(_.filter(_ != null).sortWith { (a, b) =>
+        java.util.Arrays.compareUnsigned(
+          a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+          b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
+      }.toSeq)
+
   /** Candidate near-dup pairs via LSH banding, confirmed by exact Jaccard.
     * Input: (idCol, tokens array). Output: d1, d2, jac (double) with
     * jac >= threshold. Exact-verify step makes precision 1.0; recall follows
@@ -86,7 +104,7 @@ object MinHash {
       s"numBands ($numBands) must divide numHashes ($numHashes) — see bands()")
     // Checkpoint the collapsed-set stage (lazy — eager would run a job at
     // plan-construction time; pinned against the accumulator race — see
-    // SessionCache.pin): three downstream actions (the vocab-size probe,
+    // SessionCache.pin): three downstream actions (the vocabulary collect,
     // the candidate pipeline, the member expansion) would otherwise each
     // recompute the corpus groupBy.
     val grouped = graft.SessionCache.lazyLocalCheckpoint("minhash-sets")(
@@ -117,67 +135,46 @@ object MinHash {
     // string-array intersections — same result, far cheaper per candidate.
     // (An AQE-style data-dependent plan choice; the array path is the
     // general case for open vocabularies.)
-    val vocab = sets.select(explode(col("toks")).as("tok")).distinct()
-    // limit(65): only "is it > 64" matters — don't pay a full-corpus
-    // distinct count for a branch decision.
-    val vocabRows = vocab.limit(65).collect().map(_.getString(0))
-    val confirmed = if (vocabRows.length <= 64) {
-      // Vocabulary as a LOCAL sorted literal + per-set OR-fold — the
-      // round-9 q33 maskPairs rewrite applied here in r20: the ≤65-row
-      // probe already fetches the whole vocabulary when this branch
-      // applies, so the old derivation — vocab distinct feeding a global
-      // row_number window (2 exchanges), an explode, a broadcast join and
-      // a groupBy shuffle, and the r20 plan dump showed that ENTIRE
-      // subtree planned TWICE, once per confirm side (r1/r2 aliases
-      // defeat exchange reuse) — collapses to one fold expression over
-      // the checkpointed sets. Bit assignment is unchanged:
-      // array_position over the UTF-8-byte-sorted vocab (exactly
-      // UTF8String/sort_array binary order — NOT java String order, which
-      // diverges on supplementary planes) ranks tokens like
-      // row_number-over-orderBy did; a null token (which the old window
-      // RANKED but the old join then dropped) is dropped from the layout
-      // here, a pure bit permutation invisible to the popcount Jaccard;
-      // the OR-fold is duplicate-proof (the old sum needed
-      // array_distinct) and the when() keeps null tokens contributing
-      // nothing, like the old inner join did. One semantic note: a
-      // zero-token set now carries mask 0 instead of having NO mask row,
-      // so an (empty, non-empty) candidate reaches the Jaccard filter
-      // (0, or 0/0→NaN) instead of being dropped by the old inner join —
-      // identical output for any threshold > 0 (EdgeCaseSpec pins the
-      // empty-token contract; thresholds ≤ 0 are out of contract, the
-      // S-curve is meaningless there).
-      val vocabSorted = vocabRows.filter(_ != null).sortWith { (a, b) =>
-        java.util.Arrays.compareUnsigned(
-          a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
-      }.toSeq
-      val vlit = typedLit(vocabSorted)
-      val masks = graft.SessionCache.lazyLocalCheckpoint("minhash-masks")(
-        sets.select(col("rep"),
-          aggregate(col("toks"), lit(0L), (acc, t) =>
-            when(t.isNull, acc).otherwise(acc.bitwiseOR(
-              call_function("shiftleft", lit(1L),
-                call_function("array_position", vlit, t).cast("int") - 1))))
-            .as("mask")))
-      cand
-        .join(broadcast(masks.select(col("rep").as("r1"), col("mask").as("m1"))), "r1")
-        .join(broadcast(masks.select(col("rep").as("r2"), col("mask").as("m2"))), "r2")
-        .withColumn("jac",
-          expr("bit_count(m1 & m2)").cast("double") / expr("bit_count(m1 | m2)"))
-        .filter(col("jac") >= threshold)
-        .groupBy("r1", "r2").agg(first(col("jac")).as("jac"))
-    } else {
-      // Open vocabulary: token arrays are too wide to broadcast blindly —
-      // dedupe candidates first, then shuffle-join the set arrays in.
-      val candD = cand.distinct()
-      val t1 = sets.select(col("rep").as("r1"), col("toks").as("t1"))
-      val t2 = sets.select(col("rep").as("r2"), col("toks").as("t2"))
-      candD.join(t1, "r1").join(t2, "r2")
-        .withColumn("jac",
-          size(array_intersect(col("t1"), col("t2"))).cast("double") /
-            size(array_union(col("t1"), col("t2"))))
-        .filter(col("jac") >= threshold)
-        .select("r1", "r2", "jac")
+    val confirmed = localVocab(sets) match {
+      case Some(vocabSorted) =>
+        // Vocabulary as a LOCAL sorted literal + per-set OR-fold over the
+        // checkpointed sets (the q33 maskPairs shape): array_position ranks
+        // tokens in UTF-8 byte order; the when() keeps null tokens
+        // contributing nothing, and the OR-fold is duplicate-proof. A set
+        // with no non-null token folds to mask 0. Two null-only sets
+        // ([null], [null, null]) have identical signatures, so they meet
+        // as a candidate, and the bit_count(m1 | m2) > 0 guard drops the
+        // pair before its 0/0 Jaccard (null without ANSI, a DIVIDE_BY_ZERO
+        // error with it). A mask-0 set against a non-empty one has
+        // Jaccard 0, below any threshold in contract (> 0).
+        val vlit = typedLit(vocabSorted)
+        val masks = graft.SessionCache.lazyLocalCheckpoint("minhash-masks")(
+          sets.select(col("rep"),
+            aggregate(col("toks"), lit(0L), (acc, t) =>
+              when(t.isNull, acc).otherwise(acc.bitwiseOR(
+                call_function("shiftleft", lit(1L),
+                  call_function("array_position", vlit, t).cast("int") - 1))))
+              .as("mask")))
+        cand
+          .join(broadcast(masks.select(col("rep").as("r1"), col("mask").as("m1"))), "r1")
+          .join(broadcast(masks.select(col("rep").as("r2"), col("mask").as("m2"))), "r2")
+          .filter(expr("bit_count(m1 | m2) > 0"))
+          .withColumn("jac",
+            expr("bit_count(m1 & m2)").cast("double") / expr("bit_count(m1 | m2)"))
+          .filter(col("jac") >= threshold)
+          .groupBy("r1", "r2").agg(first(col("jac")).as("jac"))
+      case None =>
+        // Open vocabulary: token arrays are too wide to broadcast blindly —
+        // dedupe candidates first, then shuffle-join the set arrays in.
+        val candD = cand.distinct()
+        val t1 = sets.select(col("rep").as("r1"), col("toks").as("t1"))
+        val t2 = sets.select(col("rep").as("r2"), col("toks").as("t2"))
+        candD.join(t1, "r1").join(t2, "r2")
+          .withColumn("jac",
+            size(array_intersect(col("t1"), col("t2"))).cast("double") /
+              size(array_union(col("t1"), col("t2"))))
+          .filter(col("jac") >= threshold)
+          .select("r1", "r2", "jac")
     }
     val members = grouped.select(col("rep"), explode(col("ids")).as("id"))
     val inter = confirmed

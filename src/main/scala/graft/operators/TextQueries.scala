@@ -107,23 +107,14 @@ object TextQueries {
         dedupClustersUncached(s, dir))
     }
 
-  /** Distinct-set cap for the driver-local clustering fast path (r20,
-    * optimization-guide §8 "decide with small rows" — the same pattern as
-    * Components.driverComponents and Ivf.driverTrain): at or below this
-    * many distinct token-set masks, the J>0.8 pair graph AND its connected
-    * components are computed on the driver from ONE (mask, srep) collect —
-    * 16 bytes/row, ≤256 KB at the cap — replacing the distributed
-    * crossJoin-pairs checkpoint, three setRep broadcast builds, and the
-    * whole Components subgraph (the r19 profile: q133 = 20 Spark jobs,
-    * 1.5 task-seconds — job/planning-bound). The bound is COMPUTE, not
-    * memory: local all-pairs is n²/2 bitmask comparisons single-threaded
-    * (~150 M/s), so 16384 sets ≈ 1.3e8 comparisons ≈ 1 s worst-case —
-    * beyond that the 32-way codegen'd crossJoin wins and the distributed
-    * pipeline below stands unchanged (ScaleCheck's 10× corpus takes it).
-    * The distributed alternative is all-pairs over the SAME relation, so
-    * any corpus for which the old path was viable is within ~10× of this
-    * cap anyway. */
-  private val DriverSetCap = 16384
+  /** Element budget of the driver clustering path: a distinct token set
+    * weighs 2 (mask, srep), so the default admits 16384 sets (256 KB).
+    * The bound is compute, not memory: local all-pairs is n²/2 bitmask
+    * comparisons single-threaded (~150 M/s), so 16384 sets ≈ 1.3e8
+    * comparisons ≈ 1 s worst-case; beyond that the codegen'd crossJoin
+    * wins and the distributed pipeline stands (ScaleCheck's 10× corpus
+    * takes it). */
+  private[graft] val DriverBudget = 32768L
 
   /** [[maskPairs]] with both frames lazily checkpointed and the PAIR
     * (masks, pairs) memoized per (session, dir) — r20: q33 and the
@@ -134,7 +125,7 @@ object TextQueries {
     * own build within a bench session. One checkpoint per (session, dir)
     * now serves every consumer; SessionCache owns invalidation (bench
     * retries) and dead-session sweeping. */
-  private def maskPairsCached(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+  private[graft] def maskPairsCached(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     graft.SessionCache.getOrBuild(s, s"mask-pairs:$dir") {
       val (masks0, pairs0) = maskPairs(s, dir)
       (graft.SessionCache.lazyLocalCheckpoint(s"dedup-masks:$dir")(masks0),
@@ -142,26 +133,13 @@ object TextQueries {
     }
 
   private[graft] def dedupClustersUncached(s: SparkSession, dir: String,
-      driverSetCap: Int = DriverSetCap): DataFrame = {
+      driverBudget: Long = DriverBudget): DataFrame = {
     val (masks, pairs) = maskPairsCached(s, dir)
-    driverClusterRelation(masks, driverSetCap).getOrElse {
-      // setRep/comp are per-DISTINCT-SET relations. Explicit broadcast: their
-      // inputs are checkpointed LogicalRDDs with unknown stats, so without the
-      // hint each join plans as a sort-merge over the 511 k-row pair frame
-      // (measured ~0.7 s of the und materialization alone). The broadcast is
-      // scale-safe by construction: the pairs stage upstream is all-pairs over
-      // distinct sets, which already constrains set cardinality far more
-      // tightly than the ~80 MB broadcast ceiling does — if the set count ever
-      // outgrew a broadcast, the cross join would have been the casualty first
-      // (and the open-vocabulary answer is the MinHash path, q50).
-      val setRep = masks.groupBy("mask").agg(min(col("doc_id")).as("srep"))
+    driverClusterRelation(masks, driverBudget).getOrElse {
+      val (setRep, edges) = setGraph(masks, pairs)
       val docSet = masks.join(broadcast(setRep), "mask").select("doc_id", "srep")
-      val edges = pairs
-        .join(broadcast(setRep.select(col("mask").as("m1"), col("srep").as("src"))), "m1")
-        .join(broadcast(setRep.select(col("mask").as("m2"), col("srep").as("dst"))), "m2")
-        .select("src", "dst")
-      val verts = setRep.select(col("srep").as("id"))
-      val comp = graft.functions.Components.connectedComponents(verts, edges)
+      val comp = graft.functions.Components.connectedComponents(
+        setRep.select(col("srep").as("id")), edges)
       docSet.join(broadcast(comp), docSet("srep") === comp("id"))
         .select(col("doc_id"), col("rep").as("cluster_rep"))
         .withColumn("cluster_size",
@@ -169,68 +147,73 @@ object TextQueries {
     }
   }
 
-  /** Driver-local replica of the distributed cluster relation, byte-exact
-    * by construction: the collected (mask, srep) rows are the SAME
-    * distinct-set relation the crossJoin/Components path consumes
-    * (mask ↔ srep is 1:1 — docs belong to exactly one mask group, so the
-    * per-group min doc_ids are distinct); the pair predicate replicates the
-    * crossJoin filter exactly (m1 < m2 by Long compare; Jaccard =
-    * bit_count ints promoted to IEEE double division, > 0.8); min-id
-    * union-find converges to the same fixpoint as Components'
-    * least()-propagation (the ComponentsSpec equivalence argument, no
-    * phantom endpoints possible since every edge endpoint is a collected
-    * srep). Returns None above the cap — the distributed pipeline is then
-    * the only execution, at the cost of this one re-aggregated
-    * limit-probe (an executeTake over the already-checkpointed masks
-    * frame, disclosed like Components.driverComponents' probe). */
-  private def driverClusterRelation(masks: DataFrame,
-      cap: Int): Option[DataFrame] = {
-    if (cap <= 0) return None
+  /** The distinct-set graph the distributed cluster relation clusters:
+    * (mask, srep) with srep = min doc_id per token set, and one (src, dst)
+    * edge of sreps per J > 0.8 set pair. Explicit broadcasts: the inputs
+    * are checkpointed LogicalRDDs with unknown stats, so without the hint
+    * each join plans as a sort-merge over the 511 k-row pair frame
+    * (measured ~0.7 s of the edge materialization alone). The broadcast is
+    * scale-safe by construction: the pairs stage upstream is all-pairs
+    * over distinct sets, which already constrains set cardinality far more
+    * tightly than the ~80 MB broadcast ceiling does — if the set count
+    * ever outgrew a broadcast, the cross join would have been the casualty
+    * first (and the open-vocabulary answer is the MinHash path, q50). */
+  private[graft] def setGraph(masks: DataFrame,
+      pairs: DataFrame): (DataFrame, DataFrame) = {
+    val setRep = masks.groupBy("mask").agg(min(col("doc_id")).as("srep"))
+    val edges = pairs
+      .join(broadcast(setRep.select(col("mask").as("m1"), col("srep").as("src"))), "m1")
+      .join(broadcast(setRep.select(col("mask").as("m2"), col("srep").as("dst"))), "m2")
+      .select("src", "dst")
+    (setRep, edges)
+  }
+
+  /** Driver-local replica of the distributed cluster relation, row-exact
+    * by construction (DedupClusterSpec pins it): the collected (mask, srep)
+    * rows are the SAME distinct-set relation the crossJoin/Components path
+    * consumes (mask ↔ srep is 1:1 — docs belong to exactly one mask group,
+    * so the per-group min doc_ids are distinct); the pair predicate
+    * replicates the crossJoin filter exactly (m1 < m2 by Long compare;
+    * Jaccard = bit_count ints promoted to IEEE double division, > 0.8);
+    * the min-srep [[graft.functions.UnionFind]] converges to Components'
+    * fixpoint (no phantom endpoints are possible, since every edge
+    * endpoint is a collected srep). Returns None when the sets do not fit
+    * `budget` in [[graft.functions.LocalPath.collectBounded]]; fallback
+    * cost: that one bounded job over the already-checkpointed masks, then
+    * the distributed pipeline. */
+  private[graft] def driverClusterRelation(masks: DataFrame,
+      budget: Long): Option[DataFrame] = {
     val spark = masks.sparkSession
     import spark.implicits._
-    val sets = masks.groupBy("mask").agg(min(col("doc_id")).as("srep"))
-      .limit(cap + 1).as[(Long, Long)].collect()
-    if (sets.length > cap) return None
-    val n = sets.length
-    val parent = Array.tabulate(n)(identity)
-    def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-      r
-    }
-    var i = 0
-    while (i < n) {
-      val (mi, _) = sets(i)
-      var j = i + 1
-      while (j < n) {
-        val (mj, _) = sets(j)
-        // crossJoin filter: m1 < m2 ∧ bit_count(m1&m2)/bit_count(m1|m2) > 0.8
-        // (both operand orders produce the same unordered pair set; the
-        // union-find is symmetric, so enumeration order is irrelevant).
-        val inter = java.lang.Long.bitCount(mi & mj)
-        val uni = java.lang.Long.bitCount(mi | mj)
-        if (uni > 0 && inter.toDouble / uni.toDouble > 0.8) {
-          val ra = find(i)
-          val rb = find(j)
-          if (ra != rb) {
-            // min-SREP roots: the root's srep is the component minimum,
-            // the invariant Components' least()-propagation converges to.
-            if (sets(ra)._2 < sets(rb)._2) parent(rb) = ra else parent(ra) = rb
-          }
+    graft.functions.LocalPath.collectBounded(
+      masks.groupBy("mask").agg(min(col("doc_id")).as("srep")).as[(Long, Long)],
+      budget)(_ => 2L).map { sets =>
+      val n = sets.length
+      val uf = new graft.functions.UnionFind(sets.map(_._2))
+      var i = 0
+      while (i < n) {
+        val mi = sets(i)._1
+        var j = i + 1
+        while (j < n) {
+          val mj = sets(j)._1
+          // crossJoin filter: m1 < m2 ∧ bit_count(m1&m2)/bit_count(m1|m2) > 0.8
+          // (both operand orders produce the same unordered pair set; the
+          // union-find is symmetric, so enumeration order is irrelevant).
+          val inter = java.lang.Long.bitCount(mi & mj)
+          val uni = java.lang.Long.bitCount(mi | mj)
+          if (uni > 0 && inter.toDouble / uni.toDouble > 0.8) uf.union(i, j)
+          j += 1
         }
-        j += 1
+        i += 1
       }
-      i += 1
+      val out = (0 until n).map(k => (sets(k)._1, sets(k)._2, uf.minKey(k)))
+      val rel = broadcast(
+        spark.createDataFrame(out).toDF("mask", "srep", "rep"))
+      masks.join(rel, "mask")
+        .select(col("doc_id"), col("rep").as("cluster_rep"))
+        .withColumn("cluster_size",
+          count(lit(1)).over(Window.partitionBy(col("cluster_rep"))))
     }
-    val out = (0 until n).map(k => (sets(k)._1, sets(k)._2, sets(find(k))._2))
-    val rel = broadcast(
-      spark.createDataFrame(out).toDF("mask", "srep", "rep"))
-    Some(masks.join(rel, "mask")
-      .select(col("doc_id"), col("rep").as("cluster_rep"))
-      .withColumn("cluster_size",
-        count(lit(1)).over(Window.partitionBy(col("cluster_rep")))))
   }
 
   private def exactNearDupPairs(s: SparkSession, dir: String): DataFrame = {

@@ -46,17 +46,16 @@ class ComponentsSpec extends AnyFunSuite {
   }
 
   /** Both execution paths, pinned against each other and the reference:
-    * the default caps route these tiny graphs through the r19 driver
-    * union-find; caps=0 forces the distributed min-label loop. */
+    * a driver budget routes these tiny graphs through the driver
+    * union-find; budget 0 forces the distributed min-label loop. */
   private def ccOf(n: Int, edges: Seq[(Long, Long)],
       forceLoop: Boolean = false): Map[Long, Long] = {
     val verts = (0L until n.toLong).toDF("id")
     val edf = if (edges.isEmpty)
       Seq.empty[(Long, Long)].toDF("src", "dst")
     else edges.toDF("src", "dst")
-    val cap = if (forceLoop) 0L else 2000000L
-    Components.connectedComponents(verts, edf,
-      driverVertexCap = cap, driverEdgeCap = cap)
+    val budget = if (forceLoop) 0L else 2000000L
+    Components.connectedComponents(verts, edf, driverBudget = budget)
       .as[(Long, Long)].collect().toMap
   }
 

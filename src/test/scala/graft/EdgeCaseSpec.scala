@@ -33,7 +33,7 @@ class EdgeCaseSpec extends AnyFunSuite {
     // edges naming vertices absent from the vertex relation are dropped by
     // the label join rather than conjuring phantom vertices — at scale a
     // pair list is routinely staler than the document snapshot it joins.
-    // Run under the default caps (driver union-find) AND caps=0 (the
+    // Run under a driver budget (driver union-find) AND budget 0 (the
     // distributed loop): r19 ADVICE #1 — the contract must hold on both.
     val verts = (0L to 3L).toDF("id")
     val edges = Seq(
@@ -42,12 +42,12 @@ class EdgeCaseSpec extends AnyFunSuite {
       (3L, 99L),  // dangling dst
       (98L, 97L)) // both absent
       .toDF("src", "dst")
-    for (cap <- Seq(2000000L, 0L)) {
+    for (budget <- Seq(2000000L, 0L)) {
       val comp = Components.connectedComponents(verts, edges,
-        driverVertexCap = cap, driverEdgeCap = cap)
+        driverBudget = budget)
         .as[(Long, Long)].collect().toMap
       assert(comp == Map(0L -> 0L, 1L -> 1L, 2L -> 1L, 3L -> 3L),
-        s"cap=$cap")
+        s"budget=$budget")
     }
   }
 
@@ -65,11 +65,11 @@ class EdgeCaseSpec extends AnyFunSuite {
       (5L, 6L),  // declared edge: 6 must inherit 5's phantom-lowered label
       (5L, 3L))  // smaller-id phantom: lowers {5,6}'s rep to 3
       .toDF("src", "dst")
-    for (cap <- Seq(2000000L, 0L)) {
+    for (budget <- Seq(2000000L, 0L)) {
       val comp = Components.connectedComponents(verts, edges,
-        driverVertexCap = cap, driverEdgeCap = cap)
+        driverBudget = budget)
         .as[(Long, Long)].collect().toMap
-      assert(comp == Map(5L -> 3L, 6L -> 3L, 7L -> 7L), s"cap=$cap: $comp")
+      assert(comp == Map(5L -> 3L, 6L -> 3L, 7L -> 7L), s"budget=$budget: $comp")
     }
   }
 
@@ -104,6 +104,20 @@ class EdgeCaseSpec extends AnyFunSuite {
     val pairs = MinHash.nearDupPairs(docs, "doc_id", "toks", 16, 4, 0.5)
       .select("d1", "d2").as[(Long, Long)].collect().toSeq
     assert(pairs == Seq((1L, 2L)))
+  }
+
+  test("nearDupPairs: distinct sets that both fold to mask 0 never pair") {
+    // The bitmask confirm drops null tokens, so [], [null] and
+    // [null, null] are three distinct token sets that all fold to mask 0;
+    // the two null-only sets also share every band hash and become a
+    // candidate. Their Jaccard is 0/0: it must neither pair them nor
+    // throw DIVIDE_BY_ZERO (ANSI) out of the whole query.
+    val docs = Seq[(Long, Seq[String])](
+      (1L, Seq.empty), (2L, Seq(null)), (3L, Seq(null, null)), (4L, Seq("a", "b")))
+      .toDF("doc_id", "toks")
+    val pairs = MinHash.nearDupPairs(docs, "doc_id", "toks", 16, 4, 0.5)
+      .select("d1", "d2").as[(Long, Long)].collect().toSeq
+    assert(pairs.isEmpty, s"mask-0 sets paired: $pairs")
   }
 
   test("simhashAgg: empty input returns an empty fingerprint relation") {

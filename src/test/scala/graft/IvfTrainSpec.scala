@@ -5,10 +5,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the r20 driver-local IVF training fast path to the distributed
-  * loop, BIT-exactly: `train(..., driverElemCap = 0)` forces the loop
-  * (the same cap-forcing contract as Components.connectedComponents), the
-  * default caps take the driver path on every input below, and the two
+/** Pins the driver-local IVF training fast path to the distributed
+  * loop, BIT-exactly: `train(..., driverBudget = 0)` forces the loop (the
+  * same budget-forcing contract as Components.connectedComponents), the
+  * default budget takes the driver path on every input below, and the two
   * must agree on every centroid coordinate's raw bits — the fast path is
   * only legal because it is a semantic no-op. */
 class IvfTrainSpec extends AnyFunSuite {
@@ -21,7 +21,7 @@ class IvfTrainSpec extends AnyFunSuite {
   private def bothPathsAgree(vecs: DataFrame, nlist: Int, iters: Int,
       label: String): Array[Array[Double]] = {
     val driver = Ivf.train(vecs, "vec_id", "e", nlist, iters)
-    val loop = Ivf.train(vecs, "vec_id", "e", nlist, iters, driverElemCap = 0)
+    val loop = Ivf.train(vecs, "vec_id", "e", nlist, iters, driverBudget = 0)
     assert(bits(driver) == bits(loop),
       s"$label: driver/loop centroid mismatch:\n driver=${driver.map(_.mkString(",")).mkString("\n  ")}\n loop=${loop.map(_.mkString(",")).mkString("\n  ")}")
     driver
@@ -86,6 +86,34 @@ class IvfTrainSpec extends AnyFunSuite {
         if (rnd.nextBoolean()) rnd.nextInt(7) - 3.0 else rnd.nextDouble() * 4 - 2))
     }
     bothPathsAgree(data.toDF("vec_id", "e"), nlist = 5, iters = 3, "random")
+  }
+
+  test("mixed dimensions: a dim-1 first row does not size the budget") {
+    // The first row is tiny and the later ones pass the budget: the
+    // bounded collect must overflow on the running element count, and the
+    // loop's result must come out unchanged. Each vector stays nearest its
+    // own init centroid, so no dim-60 vector meets the dim-1 centroid.
+    val vecs = Seq((0L, Seq(1.0)), (1L, Seq.fill(60)(1.0)),
+      (2L, Seq.fill(60)(2.0))).toDF("vec_id", "e")
+    assert(Ivf.driverTrain(vecs, "vec_id", "e", 3, 2, budget = 100).isEmpty,
+      "2 + 61 + 61 elements must not fit a budget of 100")
+    val loop = Ivf.train(vecs, "vec_id", "e", 3, 2, driverBudget = 0)
+    assert(bits(Ivf.train(vecs, "vec_id", "e", 3, 2, driverBudget = 100)) == bits(loop))
+    bothPathsAgree(vecs, nlist = 3, iters = 2, "mixed-dim")
+  }
+
+  test("ANSI off takes the loop: a coordinate >= 1e14 does not throw") {
+    // DECIMAL(28,14) holds 14 integer digits. With ANSI off the loop's
+    // cast yields NULL and its sum skips it; the driver replica would
+    // throw, so it must not run in that mode.
+    val s = spark.newSession()
+    s.conf.set("spark.sql.ansi.enabled", "false")
+    import s.implicits._
+    val vecs = Seq((0L, Seq(1e14, 0.0)), (1L, Seq(1.0, 0.0)),
+      (2L, Seq(2.0, 0.0))).toDF("vec_id", "e")
+    val driver = Ivf.train(vecs, "vec_id", "e", nlist = 1, iters = 1)
+    val loop = Ivf.train(vecs, "vec_id", "e", nlist = 1, iters = 1, driverBudget = 0)
+    assert(bits(driver) == bits(loop))
   }
 
   test("driver fast path stays off for non-long ids (loop handles them)") {

@@ -228,8 +228,8 @@ class PlanSpec extends AnyFunSuite {
     // A 64-vertex path has diameter 63: plain min-label propagation needs
     // 63 rounds, pointer jumping ~log2(63)+1 ≈ 7. maxIter=10 fails loudly
     // (partial labels ≠ 0) if the pointer-jump contraction ever regresses.
-    // Caps = 0 FORCE the distributed loop (r19 ADVICE #1): under the
-    // default caps this 64-vertex graph would take the driver union-find
+    // Budget 0 FORCES the distributed loop (r19 ADVICE #1): under the
+    // default budget this 64-vertex graph would take the driver union-find
     // fast path and the pointer-jump regression this test exists to catch
     // would pass silently.
     import spark.implicits._
@@ -238,7 +238,7 @@ class PlanSpec extends AnyFunSuite {
       (col("id") + 1).as("dst"))
     val reps = graft.functions.Components
       .connectedComponents(verts, edges, maxIter = 10,
-        driverVertexCap = 0, driverEdgeCap = 0)
+        driverBudget = 0)
       .as[(Long, Long)].collect().toMap
     assert(reps.size == 64 && reps.values.forall(_ == 0L),
       s"64-path must fully converge to rep=0 within 10 rounds: $reps")

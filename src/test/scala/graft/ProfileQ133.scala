@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Ad-hoc stage decomposition of the q133/q78 clustering pipeline at sf0.1
-  * — run with `sbt "Test/runMain graft.ProfileQ133"` (add GRAFT_CC_DEBUG=1
-  * for per-iteration change counts). Not part of the test suite.
+  * — run with `sbt "Test/runMain graft.ProfileQ133"`. Not part of the
+  * test suite.
   *
   * Reproduces the dedupClusters stages inline (the helper is private and
   * session-cached, which would hide the per-stage costs) with the same

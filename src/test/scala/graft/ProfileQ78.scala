@@ -19,7 +19,6 @@ object ProfileQ78 {
     time("full q78 (warm)") {
       Registry.queries("q78_dedup_clusters")(spark, dir).count()
     }
-    sys.env.get("GRAFT_CC_DEBUG").foreach(_ => ())
     // No spark.stop(): TestSpark.spark is suite-shared; Test/runMain forks,
     // so JVM exit cleans up (see ProfileQ130 for the rationale).
   }

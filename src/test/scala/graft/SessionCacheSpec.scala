@@ -97,6 +97,23 @@ class SessionCacheSpec extends AnyFunSuite {
     assert(SessionCache.pinCount == after1 + 1)
   }
 
+  test("invalidateMemoized drops one session's IVF index, not another's") {
+    def train(s: org.apache.spark.sql.SparkSession): Array[Array[Double]] = {
+      import s.implicits._
+      val vecs = Seq((1L, Seq(0.0, 1.0)), (2L, Seq(1.0, 0.0)), (3L, Seq(1.0, 1.0)))
+        .toDF("vec_id", "e")
+      graft.functions.Ivf.trainCached(vecs, "vec_id", "e", nlist = 2,
+        iters = 1, cacheKey = "spec-ivf")
+    }
+    val (sa, sb) = (spark.newSession(), spark.newSession())
+    val (a1, b1) = (train(sa), train(sb))
+    SessionCache.invalidateMemoized(sa)
+    assert(train(sb) eq b1, "session B must keep its own trained index")
+    val a2 = train(sa)
+    assert(!(a2 eq a1), "session A must retrain after its invalidation")
+    assert(a2.map(_.toSeq).toSeq == a1.map(_.toSeq).toSeq)
+  }
+
   test("entries for discarded newSession() children are bounded") {
     // Session-per-job over one SparkContext: the context never stops, so
     // the stopped-context sweep can't reclaim anything — the distinct-
